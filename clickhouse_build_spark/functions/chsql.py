@@ -863,14 +863,22 @@ FUNCS: dict[str, Rule] = {
     # throws DIVIDE_BY_ZERO for any zero-variance group with n>=2
     # (judge-confirmed at sf1: a 10-row single-value bucket crashed
     # ch_dialect_fill_corr). CH and DuckDB both return NULL there.
-    # regr_sxy/regr_sxx/regr_syy accumulate the SAME central
-    # co-moments (bit-exact vs Corr on non-degenerate input, pinned in
-    # tests/test_chsql.py) but expose the raw sums, so the one divide
-    # happens in try_divide: zero variance -> NULL, n=1 -> 0/0 -> NULL,
-    # n=0 -> NULL. Matches CH/DuckDB NULL semantics exactly.
+    # The form below exposes Corr's three raw co-moments so the one
+    # divide happens in try_divide: zero variance -> NULL, n=1 -> 0/0
+    # -> NULL, n=0 -> NULL. Matches CH/DuckDB NULL semantics exactly.
+    # All three come from regr_sxy, which extends Covariance: its
+    # update and merge are the ones Corr uses for ck. regr_sxx/regr_syy
+    # are NOT Corr's accumulators — they run CentralMomentAgg's
+    # m2 += d*(d - d/n) where Corr runs xMk += dx*(x - newXAvg), and
+    # the two round differently (1 ulp off at some partition counts).
+    # Covariance of a column with itself reduces term by term to Corr's
+    # xMk/yMk update and merge; nvl2 masks the other side's NULL rows
+    # so it skips exactly the rows Corr skips. Bit-exact vs Corr at any
+    # partition count (pinned in tests/test_chsql.py).
     "corr": lambda a: (
         f"try_divide(regr_sxy({a[0]}, {a[1]}), "
-        f"sqrt(regr_sxx({a[0]}, {a[1]}) * regr_syy({a[0]}, {a[1]})))"
+        f"sqrt(regr_sxy({a[0]}, nvl2({a[1]}, {a[0]}, NULL)) * "
+        f"regr_sxy(nvl2({a[0]}, {a[1]}, NULL), {a[1]})))"
     ),
     "retention": lambda a: _retention(a),
     # anyHeavy returns a heavy hitter (CH's approximate majority

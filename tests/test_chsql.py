@@ -1595,7 +1595,8 @@ def test_corr_zero_variance_bucket_null_not_crash(spark):
     """Judge-confirmed sf1 crash (VERDICT r11 #1): a bucket with n>=2
     rows but ONE distinct value makes Spark's native ``corr`` divide by
     sqrt(0) under ANSI mode. The translator maps CH ``corr`` to the
-    regr_sxy/sxx/syy co-moment form with ``try_divide`` — zero-variance
+    regr_sxy co-moment form (the cross co-moment plus the nvl2-masked
+    self co-moments of x and y) with ``try_divide`` — zero-variance
     and singleton groups yield NULL, matching CH and the DuckDB oracle.
     """
     from clickhouse_build_spark.functions.chsql import run_ch_sql
@@ -1640,6 +1641,35 @@ def test_corr_bitexact_vs_native_on_nondegenerate(spark):
     translated = run_ch_sql(
         spark, "SELECT corr(x, y) AS c FROM corr_nd"
     ).collect()[0]["c"]
+    assert translated == native
+
+
+@pytest.mark.parametrize("slices", [1, 2, 3, 4, 7])
+def test_corr_bitexact_vs_native_grouped_with_nulls_any_partitioning(spark, slices):
+    """The translated corr must equal Spark's Corr bit-for-bit per group
+    whatever the input partitioning (results must not depend on core
+    count), with NULLs in x and in y skipped exactly as Corr skips
+    them. Explicit slice counts, not defaultParallelism, so the check
+    is the same on every host."""
+    import random
+
+    rng = random.Random(11)
+    rows = []
+    for g in range(6):
+        for _ in range(300):
+            x = rng.uniform(-50, 400) if rng.random() > 0.1 else None
+            y = rng.gauss(g * 10.0, 3.0 + g) if rng.random() > 0.1 else None
+            rows.append((g, x, y))
+    rdd = spark.sparkContext.parallelize(rows, slices)
+    spark.createDataFrame(rdd, "g int, x double, y double").createOrReplaceTempView(
+        "corr_grouped_nulls"
+    )
+    sql = "SELECT g, corr(x, y) AS c FROM corr_grouped_nulls GROUP BY g ORDER BY g"
+    native = [(r["g"], r["c"]) for r in spark.sql(sql).collect()]
+    from clickhouse_build_spark.functions.chsql import run_ch_sql
+
+    translated = [(r["g"], r["c"]) for r in run_ch_sql(spark, sql).collect()]
+    assert len(native) == 6 and all(c is not None for _, c in native)
     assert translated == native
 
 
