@@ -22,6 +22,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from clickhouse_build_spark.localframe import local_frame
+
 
 def ch_type_name(dt: T.DataType, nullable: bool = False) -> str:
     """Spark type → ClickHouse type name (DESCRIBE/SHOW CREATE)."""
@@ -124,15 +126,18 @@ def try_ch_meta(
         if m.group("pat") is not None:
             rx = re.compile(_like_to_regex(m.group("pat")))
             names = [n for n in names if rx.match(n)]
-        return spark.createDataFrame(
-            [(n,) for n in names], T.StructType([T.StructField("name", T.StringType())])
+        return local_frame(
+            spark,
+            [(n,) for n in names],
+            T.StructType([T.StructField("name", T.StringType())]),
         )
     m = _DESCRIBE.match(text)
     if m:
         schema = _schema_of(spark, catalog, m.group("t").lower())
         if schema is None:
             raise ValueError(f"DESCRIBE: unknown table {m.group('t')!r}")
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(f.name, ch_type_name(f.dataType, f.nullable)) for f in schema],
             T.StructType(
                 [
@@ -144,7 +149,8 @@ def try_ch_meta(
     m = _EXISTS.match(text)
     if m:
         present = m.group("t").lower() in _table_names(catalog)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(1 if present else 0,)],
             T.StructType([T.StructField("result", T.IntegerType())]),
         )
@@ -161,8 +167,10 @@ def try_ch_meta(
             f"CREATE TABLE {name}\n(\n    {cols}\n)\n"
             "ENGINE = MergeTree\nORDER BY tuple()"
         )
-        return spark.createDataFrame(
-            [(ddl,)], T.StructType([T.StructField("statement", T.StringType())])
+        return local_frame(
+            spark,
+            [(ddl,)],
+            T.StructType([T.StructField("statement", T.StringType())]),
         )
     m = _EXPLAIN.match(text)
     if m:
@@ -172,8 +180,10 @@ def try_ch_meta(
         mode = (m.group("mode") or "PLAN").upper()
         if mode == "SYNTAX":
             rows = [(ln,) for ln in inner.splitlines() if ln.strip()]
-            return spark.createDataFrame(
-                rows, T.StructType([T.StructField("explain", T.StringType())])
+            return local_frame(
+                spark,
+                rows,
+                T.StructType([T.StructField("explain", T.StringType())]),
             )
         spark_mode = {
             "AST": "EXTENDED",

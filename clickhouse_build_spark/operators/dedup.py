@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from clickhouse_build_spark.localframe import local_frame
+
 # ---------------------------------------------------------------- hashing
 
 
@@ -610,9 +612,7 @@ def dedup_keepers(
         label_rows = [(x, find(x)) for x in parent] + [
             (x, x) for x in set(parent.values()) if parent.get(x, x) == x
         ]
-        labels = spark.createDataFrame(
-            label_rows or [], f"{id_col} long, keeper long"
-        )
+        labels = local_frame(spark, label_rows, f"{id_col} long, keeper long")
         return ids.select(id_col).join(F.broadcast(labels), id_col, "left").select(
             id_col, F.coalesce("keeper", F.col(id_col)).alias("keeper")
         )

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from clickhouse_build_spark.localframe import local_frame
 from clickhouse_build_spark.operators.codecs import (
     decode_png_gray,
     decode_wav_pcm8,
@@ -294,7 +295,7 @@ def synthetic_media(spark: SparkSession, n: int = 24) -> DataFrame:
     # Python-worker spin-up per partition, so defaulting to the session
     # parallelism (32) costs ~30 s of pure worker startup for 24 rows.
     # Real media arrives from parquet with data-sized partitioning.
-    return spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(4)
+    return local_frame(spark, rows, MEDIA_SCHEMA).coalesce(4)
 
 
 def media_from_documents(

@@ -30,12 +30,15 @@ to the driver — never the full corpus.
 from __future__ import annotations
 
 import hashlib
+from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from clickhouse_build_spark.localframe import local_frame
 
 # ------------------------------------------------------------ vector math
 
@@ -84,8 +87,8 @@ def cosine_pairs_blocked(
     # and the bound exists precisely to stop an oversized collect.
     first = vectors.select(vec_col).head(1)
     if not first:
-        return vectors.sparkSession.createDataFrame(
-            [], "vec_a long, vec_b long, cos_sim double"
+        return local_frame(
+            vectors.sparkSession, [], "vec_a long, vec_b long, cos_sim double"
         )
     size_mb = vectors.count() * len(first[0][0]) * 8 / 2**20
     if size_mb > max_broadcast_mb:
@@ -288,49 +291,80 @@ def lsh_topk(
 # --------------------------------------------------------------- IVF-Flat
 
 
-def ivf_train(
+IVF_SAMPLE_CAP = 1_000_000
+_SAMPLE_BUCKETS = 1 << 20
+
+
+@dataclass(frozen=True)
+class VectorSample:
+    """A bounded, deterministic, id-ordered corpus sample held on the
+    driver (:func:`sample_vectors`). ``bucket`` is each row's portable-
+    hash bucket in [0, 2^20); a row belongs to the sample of cap c iff
+    the corpus has at most c rows or its bucket is under c's cut, so
+    the samples of every cap up to ``cap`` are subsets of this one and
+    :meth:`capped` carves them out without touching the corpus again."""
+
+    n: int  # corpus rows
+    cap: int  # the largest cap this sample serves
+    X: np.ndarray  # (rows, dim) float64, id order
+    bucket: np.ndarray  # (rows,) int64
+
+    def capped(self, cap: int) -> np.ndarray:
+        if cap > self.cap:
+            raise ValueError(f"sample drawn at cap {self.cap} cannot serve cap {cap}")
+        if self.n <= cap:
+            return self.X
+        return self.X[self.bucket < int(_SAMPLE_BUCKETS * cap / self.n)]
+
+
+def sample_vectors(
     vectors: DataFrame,
-    k: int,
+    cap: int = IVF_SAMPLE_CAP,
     id_col: str = "vec_id",
     vec_col: str = "e",
-    sample_cap: int = 1_000_000,
-    iters: int = 5,
-) -> DataFrame:
-    """Production IVF coarse-quantizer: spherical k-means (Lloyd) on a
-    bounded, DETERMINISTIC sample → (cell, ce) centroid frame.
+) -> VectorSample:
+    """Count the corpus once and collect its training sample once: every
+    row when ``n ≤ cap``, else the rows whose portable md5 hash falls
+    under ``cap/n`` (stable under repartitioning, unlike
+    ``DataFrame.sample``), ordered by id. An empty corpus or vectors of
+    differing lengths raise ``ValueError`` — neither can train a
+    quantizer, and numpy would fail later with a shape error.
 
-    The deterministic-stride sample used by the oracle-checked
-    ``emb_ann_ivf_topk`` keeps the structure SQL-reproducible; this is
-    the trainer a real corpus wants — centroids that adapt to the data
-    distribution instead of being corpus rows.
-
-    Determinism without an RNG: the sample keeps ids whose portable md5
-    hash falls under ``sample_cap/n`` (stable under repartitioning,
-    unlike ``DataFrame.sample``), inits centroids at evenly-spaced ranks
-    of the id-sorted sample, and Lloyd's iterations are pure numpy.
-    Lloyd monotonically improves quantization error over that init, so
-    the trained centroids are never worse than the sampled baseline on
-    the training sample (tests assert it corpus-wide).
-
-    100 TB: only the ≤ ``sample_cap`` sample is collected to the driver
-    (at 1e6 × 64 dims ≈ 0.5 GB) — the corpus itself is never moved; one
-    ``count()`` for the sampling fraction is the only full-data action,
-    and assignment afterwards is :func:`ivf_assign`'s broadcast pass.
-    Empty cells keep their previous centroid (classic Lloyd fallback).
-    """
+    100 TB: only the ≤ ``cap`` sample reaches the driver (at 1e6 × 64
+    dims ≈ 0.5 GB); the ``count()`` is the only full-data action."""
     from clickhouse_build_spark.operators.dedup import portable_hash
 
     n = vectors.count()
-    sample = vectors
-    if n > sample_cap:
-        scale = 1 << 20
-        cut = int(scale * sample_cap / n)
-        sample = vectors.filter(
-            F.pmod(portable_hash(F.col(id_col).cast("string"), "ivf-sample"), scale)
-            < cut
+    if n == 0:
+        raise ValueError("empty corpus: no vectors to sample for IVF training")
+    bucket = F.pmod(
+        portable_hash(F.col(id_col).cast("string"), "ivf-sample"), _SAMPLE_BUCKETS
+    )
+    sample = vectors.select(id_col, vec_col, bucket.alias("__bucket"))
+    if n > cap:
+        sample = sample.filter(
+            F.col("__bucket") < int(_SAMPLE_BUCKETS * cap / n)
         )
-    rows = sample.select(id_col, vec_col).orderBy(id_col).collect()
-    X = np.vstack([r[1] for r in rows]).astype(np.float64)
+    rows = sorted(sample.collect(), key=lambda r: r[0])
+    dims = {None if r[1] is None else len(r[1]) for r in rows}
+    if len(dims) > 1 or None in dims:
+        raise ValueError(
+            f"ragged corpus: {vec_col!r} holds vectors of lengths "
+            f"{sorted(dims, key=str)} — every vector needs the same dimension"
+        )
+    X = np.array([r[1] for r in rows], dtype=np.float64)
+    X.setflags(write=False)  # shared by every trainer of the session
+    return VectorSample(
+        n=n, cap=cap, X=X, bucket=np.array([r[2] for r in rows], dtype=np.int64)
+    )
+
+
+def spherical_lloyd(X: np.ndarray, k: int, iters: int) -> np.ndarray:
+    """Spherical k-means over the sample rows ``X`` → the (k, dim)
+    centroid matrix, row c being cell c's unit centroid. Zero rows are
+    dropped, centroids init at evenly-spaced ranks of the (id-ordered)
+    sample, and Lloyd's iterations are pure numpy; empty cells keep
+    their previous centroid (classic Lloyd fallback)."""
     # Drop zero vectors BEFORE normalizing — a single zero row would
     # become NaN and poison every Lloyd iteration it touches (the same
     # degenerate input lsh_bucketed_cosine_pairs guards against).
@@ -351,10 +385,43 @@ def ivf_train(
                 norm = np.linalg.norm(m)
                 if norm > 0:
                     C[c] = m / norm
-    return vectors.sparkSession.createDataFrame(
-        [(int(c), [float(x) for x in C[c]]) for c in range(k)],
+    return C
+
+
+def centroid_frame(spark, C: np.ndarray) -> DataFrame:
+    """The (cell, ce) frame of a cell-ordered centroid matrix."""
+    return local_frame(
+        spark,
+        [(c, C[c].tolist()) for c in range(len(C))],
         "cell long, ce array<double>",
     )
+
+
+def ivf_train(
+    vectors: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "e",
+    sample_cap: int = IVF_SAMPLE_CAP,
+    iters: int = 5,
+) -> DataFrame:
+    """Production IVF coarse-quantizer: spherical k-means (Lloyd) on a
+    bounded, DETERMINISTIC sample → (cell, ce) centroid frame.
+
+    The deterministic-stride sample used by the oracle-checked
+    ``emb_ann_ivf_topk`` keeps the structure SQL-reproducible; this is
+    the trainer a real corpus wants — centroids that adapt to the data
+    distribution instead of being corpus rows.
+
+    Determinism without an RNG: :func:`sample_vectors` picks the sample
+    by portable hash, :func:`spherical_lloyd` inits at evenly-spaced
+    ranks of the id-sorted sample. Lloyd monotonically improves
+    quantization error over that init, so the trained centroids are
+    never worse than the sampled baseline on the training sample (tests
+    assert it corpus-wide). Assignment afterwards is :func:`ivf_assign`'s
+    broadcast pass."""
+    sample = sample_vectors(vectors, sample_cap, id_col, vec_col)
+    return centroid_frame(vectors.sparkSession, spherical_lloyd(sample.X, k, iters))
 
 
 def quantization_cost(
@@ -428,7 +495,7 @@ def ivf_assign(
 
 def ivf_assign_kernel(
     vectors: DataFrame,
-    centroids: DataFrame,
+    centroids: DataFrame | np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "e",
     exclude: DataFrame | None = None,
@@ -440,6 +507,8 @@ def ivf_assign_kernel(
     (max cosine, lowest cell id on exact ties — centroid rows are
     ordered by cell, so numpy's first-max argmax IS the lowest-cell
     tiebreak), same output shape (``vectors["*"]`` + ``cell``).
+    ``centroids`` is a (cell, ce) frame or, when the caller already
+    holds it, the cell-ordered centroid matrix (row c = cell c).
 
     Used by the AT-REST INDEX family (index encode, sub-cell trainer,
     probe rank-2), whose oracles re-derive from the exported parquet —
@@ -460,16 +529,16 @@ def ivf_assign_kernel(
     ``top2`` (r17) additionally emits ``cell2`` — the runner-up cell —
     from the SAME score matrix: mask the winning column, argmax again.
     That is arithmetic-for-arithmetic the rank-2 ``exclude`` pass
-    (identical S, identical first-max tiebreak), so the index build can
-    hand the probe builder its rank-2 assignment for free instead of
-    the probe build re-reading and re-scoring every vector.
+    (identical S, identical first-max tiebreak), so one pass serves
+    both the index (rank 1) and the nprobe=2 probe table (rank 2).
     """
-    import numpy as np
-    import pandas as pd
-
-    rows = centroids.orderBy("cell").collect()  # bounded ≤ 4096 rows
-    cells_arr = np.array([r["cell"] for r in rows], dtype=np.int64)
-    C = np.vstack([np.asarray(r["ce"], dtype=np.float64) for r in rows])
+    if isinstance(centroids, DataFrame):
+        rows = centroids.orderBy("cell").collect()  # bounded ≤ 4096 rows
+        cells_arr = np.array([r["cell"] for r in rows], dtype=np.int64)
+        C = np.vstack([np.asarray(r["ce"], dtype=np.float64) for r in rows])
+    else:
+        C = centroids
+        cells_arr = np.arange(len(C), dtype=np.int64)
     cn = np.linalg.norm(C, axis=1)
     cn[cn == 0] = 1.0
     spark = vectors.sparkSession
@@ -667,7 +736,8 @@ def train_subcells(
         return None
     spark = assigned.sparkSession
     scale = 1 << 20
-    cuts = spark.createDataFrame(
+    cuts = local_frame(
+        spark,
         [
             (
                 int(c),
@@ -854,41 +924,18 @@ def pq_train(
 
 
 def ivfpq_train_from_sample(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    m: int,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    sample_cap: int = 1_000_000,
-    iters: int = 10,
-) -> "np.ndarray":
-    """Sample the corpus (bounded, deterministic — :func:`ivf_train`'s
-    portable-hash recipe), coarse-assign the sample to the given
-    centroids in numpy exactly as :func:`ivf_assign` does (max cosine,
-    lowest cell on ties), and train PQ codebooks on the residuals
-    v − centroid. Returns the (m, k, dim/m) tensor; only the sample and
-    the |cells|-row centroid frame ever reach the driver."""
-    from clickhouse_build_spark.operators.dedup import portable_hash
-
-    n = vectors.count()
-    sample = vectors
-    if n > sample_cap:
-        scale = 1 << 20
-        cut = int(scale * sample_cap / n)
-        sample = vectors.filter(
-            F.pmod(portable_hash(F.col(id_col).cast("string"), "ivf-sample"), scale)
-            < cut
-        )
-    rows = sample.select(id_col, vec_col).orderBy(id_col).collect()
-    X = np.vstack([r[1] for r in rows]).astype(np.float64)
-    crows = centroids.orderBy("cell").collect()
-    C = np.vstack([r["ce"] for r in crows]).astype(np.float64)
+    X: np.ndarray, C: np.ndarray, m: int, k: int, iters: int = 10
+) -> np.ndarray:
+    """Coarse-assign the driver sample ``X`` (raw, id-ordered rows) to
+    the cell-ordered centroid matrix ``C`` in numpy exactly as
+    :func:`ivf_assign` does (max cosine, lowest cell on ties) and train
+    PQ codebooks on the residuals v − centroid. Returns the
+    (m, k, dim/m) tensor."""
     norms = np.linalg.norm(X, axis=1, keepdims=True)
     cnorms = np.linalg.norm(C, axis=1, keepdims=True)
     # cosine argmax with lowest-cell tiebreak == ivf_assign's
-    # max(struct(cos, -cell)): argmax takes the FIRST max and crows are
-    # cell-ascending. Zero vectors get cosine 0 to every cell → cell 0.
+    # max(struct(cos, -cell)): argmax takes the FIRST max and C's rows
+    # are cell-ascending. Zero vectors get cosine 0 to every cell → cell 0.
     sims = np.where(norms > 0, X / np.where(norms == 0, 1, norms), 0) @ (
         C / cnorms
     ).T

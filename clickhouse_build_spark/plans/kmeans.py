@@ -237,7 +237,11 @@ def shared_kmeans(
         qv = _qv(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
         # D once from the corpus (one metadata-cheap first-row read);
         # feeds the single-shuffle column-wise centroid update
-        dim = len(qv.select("q").head()[0])
+        first = qv.select("q").head()
+        if first is None:
+            qv.unpersist()
+            raise ValueError("empty corpus: k-means has no embeddings to cluster")
+        dim = len(first[0])
         centa = _init_centroid_arrays(spark, sf_dir, qv)
         assign = None
         for _ in range(KM_ITERS):

@@ -16,7 +16,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_build_spark.catalog import load_tables
+from clickhouse_build_spark.localframe import local_frame
 from clickhouse_build_spark.operators.similarity import (
+    VectorSample,
+    centroid_frame,
     cosine,
     lsh_topk_batch,
     cosine_pairs_blocked,
@@ -24,10 +27,11 @@ from clickhouse_build_spark.operators.similarity import (
     ivf_assign,
     ivf_assign_kernel,
     ivf_topk,
-    ivf_train,
     lsh_bucketed_cosine_pairs,
     lsh_topk,
     random_hyperplanes,
+    sample_vectors,
+    spherical_lloyd,
 )
 from clickhouse_build_spark.plans.registry import query
 
@@ -169,30 +173,44 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session-scoped trained-index artifact (same pattern as the dedup
+# Session-scoped trained-index artifacts (same pattern as the dedup
 # artifacts, plans/dedup.py): a production system trains the IVF coarse
 # quantizer at ingest and every ANN query probes the SAME index —
-# re-running Lloyd per query models the wrong pipeline. Keyed on
-# (applicationId, sf_dir, k, iters); the centroid frame is k rows, so
-# the persist is trivial at any scale and a standalone driver run
-# rebuilds it transparently.
-_IVF_INDEX: dict[tuple[str, str, int, int], DataFrame] = {}
+# re-running Lloyd per query models the wrong pipeline. The corpus is
+# counted and sampled ONCE per (applicationId, sf_dir); every trainer
+# (the IVF centroids at any k, the PQ codebooks) and nlist read that
+# sample. Each trained quantizer keeps its cell-ordered centroid matrix
+# beside the (cell, ce) frame, so no consumer collects the frame back.
+_IVF_SAMPLE: dict[tuple[str, str], VectorSample] = {}
+_IVF_INDEX: dict[tuple[str, str, int, int], tuple] = {}
+
+
+def shared_ivf_sample(spark: SparkSession, sf_dir: str) -> VectorSample:
+    from clickhouse_build_spark.plans.artifacts import session_artifact
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    return session_artifact(
+        _IVF_SAMPLE, key, lambda: sample_vectors(_vectors(spark, sf_dir))
+    )
+
+
+def shared_ivf_quantizer(spark: SparkSession, sf_dir: str, k: int, iters: int):
+    """(centroid frame, cell-ordered centroid matrix) of the corpus's
+    k-cell spherical k-means quantizer."""
+    from clickhouse_build_spark.plans.artifacts import session_artifact
+
+    def build():
+        C = spherical_lloyd(shared_ivf_sample(spark, sf_dir).X, k, iters)
+        return centroid_frame(spark, C), C
+
+    key = (spark.sparkContext.applicationId, sf_dir, k, iters)
+    return session_artifact(_IVF_INDEX, key, build)
 
 
 def shared_ivf_centroids(
     spark: SparkSession, sf_dir: str, k: int, iters: int
 ) -> DataFrame:
-    from clickhouse_build_spark.plans.artifacts import session_artifact
-
-    def build() -> DataFrame:
-        from pyspark import StorageLevel
-
-        return ivf_train(_vectors(spark, sf_dir), k=k, iters=iters).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
-    key = (spark.sparkContext.applicationId, sf_dir, k, iters)
-    return session_artifact(_IVF_INDEX, key, build)
+    return shared_ivf_quantizer(spark, sf_dir, k, iters)[0]
 
 
 @query(
@@ -861,7 +879,7 @@ def emb_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 d = qe[j] - ce[j]
                 acc = acc + d * d  # left-assoc, matches _pq_dist_terms
             lut_rows.append((code, s, acc))
-    lut = spark.createDataFrame(lut_rows, "code int, s int, qd double")
+    lut = local_frame(spark, lut_rows, "code int, s int, qd double")
     # ADC scan as ONE broadcast join (the emb_ivfpq_topk shape,
     # measured ~4× faster than eight chained per-subspace joins): fan
     # each vector's codes out to (subspace, code) rows, join the
@@ -947,13 +965,10 @@ SEMDEDUP_CELL_ROWS = 64
 # tripwire, not an ANN-quality claim (see IVFPQ_RECALL_FLOOR).
 IVFPQ_NPROBE = 4
 
-_IVFPQ_NLIST: dict[tuple[str, str], int] = {}
-
-
 def ivfpq_cells(spark: SparkSession, sf_dir: str) -> int:
     """Corpus-derived coarse cell count: ⌊√n⌋ clamped to
-    [{IVFPQ_CELLS_MIN}, IVFPQ_MAX_CELLS]. One count() per (session,
-    corpus), cached alongside the other trained artifacts.
+    [{IVFPQ_CELLS_MIN}, IVFPQ_MAX_CELLS], n read from the session's
+    shared training sample (:func:`shared_ivf_sample` — counted once).
 
     The TRAINED index's cap is {IVFPQ_MAX_CELLS}, not the untrained
     variant's IVF_MAX_CELLS=128 (that cap exists for SQL
@@ -969,14 +984,14 @@ def ivfpq_cells(spark: SparkSession, sf_dir: str) -> int:
     broadcast tensor ({IVFPQ_MAX_CELLS}×64 floats ≈ 1 MB)."""
     import math
 
-    from clickhouse_build_spark.plans.artifacts import session_artifact
+    n = shared_ivf_sample(spark, sf_dir).n
+    return max(IVFPQ_CELLS_MIN, min(IVFPQ_MAX_CELLS, math.isqrt(n)))
 
-    def build() -> int:
-        n = load_tables(spark, sf_dir)["embeddings"].count()
-        return max(IVFPQ_CELLS_MIN, min(IVFPQ_MAX_CELLS, math.isqrt(n)))
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    return session_artifact(_IVFPQ_NLIST, key, build)
+def _ivfpq_quantizer(spark: SparkSession, sf_dir: str):
+    """The IVF-PQ chain's coarse quantizer at the corpus-derived nlist:
+    (centroid frame, cell-ordered centroid matrix)."""
+    return shared_ivf_quantizer(spark, sf_dir, k=ivfpq_cells(spark, sf_dir), iters=5)
 
 
 def ivfpq_nprobe(cells: int) -> int:
@@ -1003,11 +1018,7 @@ IVFPQ_RECALL_FLOOR = 0.5
 
 _PQ_BOOKS: dict[tuple[str, str], object] = {}
 _IVFPQ_INDEX: dict[tuple[str, str], str] = {}  # at-rest parquet dirs
-# Rank-2 coarse assignment handoff from the index build to the probe
-# build (r17): keyed (applicationId, sf_dir); populated ONLY when this
-# session ran the index encode (a warm at-rest index skips the build
-# and the probe path falls back to its exclusion kernel).
-_IVFPQ_RANK2: dict[tuple[str, str], DataFrame] = {}
+_COARSE: dict[tuple[str, str], DataFrame] = {}
 
 # At-rest root for the IVFPQ index exports (r08; hardened r09 per
 # ADVICE). The oracle SQL is a STATIC string, so the index must land at
@@ -1204,24 +1215,21 @@ _CORPUS_FP_SQL = (
 def shared_pq_codebooks(spark: SparkSession, sf_dir: str):
     """Trained per-subspace PQ codebooks for the corpus's coarse
     residuals — the (m, k, dim/m) tensor, trained once per (session,
-    sf_dir) on the same bounded driver sample the coarse quantizer
-    uses. Production trains this at index-build time; every encode and
-    every query LUT reads the same tensor."""
+    sf_dir) on the ≤ IVFPQ_TRAIN_CAP slice of the shared training
+    sample the coarse quantizer uses. Production trains this at
+    index-build time; every encode and every query LUT reads the same
+    tensor."""
     from clickhouse_build_spark.operators.similarity import (
         ivfpq_train_from_sample,
     )
     from clickhouse_build_spark.plans.artifacts import session_artifact
 
     def build():
-        cent = shared_ivf_centroids(
-            spark, sf_dir, k=ivfpq_cells(spark, sf_dir), iters=5
-        )
         return ivfpq_train_from_sample(
-            _vectors(spark, sf_dir),
-            cent,
+            shared_ivf_sample(spark, sf_dir).capped(IVFPQ_TRAIN_CAP),
+            _ivfpq_quantizer(spark, sf_dir)[1],
             m=PQ_M,
             k=IVFPQ_K,
-            sample_cap=IVFPQ_TRAIN_CAP,
         )
 
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -1250,55 +1258,47 @@ def _unit_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _normalize(_vectors(spark, sf_dir))
 
 
-def _ivfpq_encode(
-    spark: SparkSession,
-    sf_dir: str,
-    vectors: DataFrame,
-    top2: bool = False,
-) -> DataFrame:
-    """Encode a (vec_id, e) frame against the corpus's TRAINED
-    artifacts (coarse centroids + residual codebooks) → (vec_id, cell,
-    c0..c7). Shared by the index build and incremental append — the
-    appended rows' codes are bit-identical to what a full re-encode
-    would produce because both run this exact kernel against the same
-    trained tensors. Coarse assignment happens here (one vectorized
-    kernel pass over the input frame, ADVICE r14: no caller has a
-    precomputed assignment to share at encode time — the index IS
-    what first materializes rank 1).
+def shared_coarse_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, e, cell, cell2): every nonzero corpus vector, unit-
+    normalized (:func:`_unit_vectors`), with its nearest coarse cell and
+    its runner-up, from ONE top-2 kernel pass per (session, corpus),
+    checkpointed. The index encode and the sub-cell trainer read rank 1,
+    the nprobe=2 probe table reads rank 2 — the runner-up is the
+    exclusion pass's cell arithmetic-for-arithmetic (same score matrix,
+    same first-max tiebreak; pytest-pinned in tests/test_semdedup.py)."""
+    from clickhouse_build_spark.plans.artifacts import session_artifact
 
-    ``top2`` (r17): ride the runner-up coarse cell (``cell2``) through
-    the encode output — computed for free from the assignment kernel's
-    existing score matrix, so the index build can hand the probe
-    builder its rank-2 pass (see :func:`shared_ivfpq_probes`)."""
+    def build() -> DataFrame:
+        return ivf_assign_kernel(
+            _unit_vectors(spark, sf_dir), _ivfpq_quantizer(spark, sf_dir)[1], top2=True
+        ).localCheckpoint(eager=True)
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    return session_artifact(_COARSE, key, build)
+
+
+def _pq_encode(spark: SparkSession, sf_dir: str, assigned: DataFrame) -> DataFrame:
+    """PQ-encode coarse-assigned unit vectors — a (vec_id, e, cell, ...)
+    frame — against the corpus's trained centroids and codebooks →
+    (vec_id, cell, c0..c7). One vectorized Arrow kernel: the residual
+    e − centroid (the same IEEE subtraction per element as an SQL
+    ``zip_with``), then the per-subspace argmin over the broadcast
+    codebook tensor."""
     import numpy as np
     import pandas as pd
 
-    cent = shared_ivf_centroids(
-        spark, sf_dir, k=ivfpq_cells(spark, sf_dir), iters=5
-    )
+    C = _ivfpq_quantizer(spark, sf_dir)[1]
     books = shared_pq_codebooks(spark, sf_dir)
-    unit = _normalize(vectors)
-    assigned = ivf_assign_kernel(unit, cent, top2=top2)
-    res = assigned.join(F.broadcast(cent), "cell").select(
-        "vec_id",
-        "cell",
-        *(["cell2"] if top2 else []),
-        F.zip_with("e", "ce", lambda x, y: x - y).alias("res"),
-    )
-    bc = spark.sparkContext.broadcast(np.asarray(books, dtype=np.float64))
+    bc = spark.sparkContext.broadcast((C, np.asarray(books, dtype=np.float64)))
 
     def encode(batches):
-        bks = bc.value  # (PQ_M, k, PQ_SUB)
+        Cm, bks = bc.value  # (nlist, dim), (PQ_M, k, PQ_SUB)
         for pdf in batches:
             if not len(pdf):
                 continue
-            R = np.vstack(pdf["res"].values)
-            out = {
-                "vec_id": pdf["vec_id"].values,
-                "cell": pdf["cell"].values,
-            }
-            if top2:
-                out["cell2"] = pdf["cell2"].values
+            cells = pdf["cell"].values
+            R = np.vstack(pdf["e"].values) - Cm[cells]
+            out = {"vec_id": pdf["vec_id"].values, "cell": cells}
             codes = [
                 np.empty(len(pdf), dtype=np.int32) for _ in range(PQ_M)
             ]
@@ -1314,12 +1314,25 @@ def _ivfpq_encode(
                 out[f"c{s}"] = codes[s]
             yield pd.DataFrame(out)
 
-    schema = (
-        "vec_id long, cell long, "
-        + ("cell2 long, " if top2 else "")
-        + ", ".join(f"c{s} int" for s in range(PQ_M))
+    schema = "vec_id long, cell long, " + ", ".join(
+        f"c{s} int" for s in range(PQ_M)
     )
-    return res.mapInPandas(encode, schema)
+    return assigned.select("vec_id", "e", "cell").mapInPandas(encode, schema)
+
+
+def _ivfpq_encode(
+    spark: SparkSession, sf_dir: str, vectors: DataFrame
+) -> DataFrame:
+    """Encode a (vec_id, e) frame against the corpus's TRAINED
+    artifacts (coarse centroids + residual codebooks) → (vec_id, cell,
+    c0..c7) — the incremental-append path. The appended rows' codes are
+    bit-identical to what a full re-encode would produce because both
+    run :func:`_pq_encode` against the same trained tensors, after the
+    same normalize-then-assign kernel as :func:`shared_coarse_assignment`."""
+    unit = _normalize(vectors)
+    return _pq_encode(
+        spark, sf_dir, ivf_assign_kernel(unit, _ivfpq_quantizer(spark, sf_dir)[1])
+    )
 
 
 def _corpus_discriminators(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
@@ -1344,20 +1357,18 @@ def shared_subcell_centroids(spark: SparkSession, sf_dir: str):
     sub-centroids targeting ``SEMDEDUP_CELL_ROWS`` occupancy, or None
     when every top-level cell is already under target (all shipped
     test SFs — the split only activates at scale). Trained ONCE per
-    (session, corpus) from the same unit-normalized frame every other
-    consumer scores, so index build, probe table and incremental
+    (session, corpus) from the shared coarse assignment's unit vectors
+    and rank-1 cells, so index build, probe table and incremental
     append assign sub-cells bit-identically. The frame is ~n/target
     rows; consumers only ever equi-join it on ``cell``."""
     from clickhouse_build_spark.operators.similarity import train_subcells
     from clickhouse_build_spark.plans.artifacts import session_artifact
 
     def build():
-        cent = shared_ivf_centroids(
-            spark, sf_dir, k=ivfpq_cells(spark, sf_dir), iters=5
-        )
-        assigned = ivf_assign_kernel(_unit_vectors(spark, sf_dir), cent)
         sub = train_subcells(
-            assigned, cent, target_rows=SEMDEDUP_CELL_ROWS
+            shared_coarse_assignment(spark, sf_dir).select("vec_id", "e", "cell"),
+            _ivfpq_quantizer(spark, sf_dir)[0],
+            target_rows=SEMDEDUP_CELL_ROWS,
         )
         if sub is None:
             return _SUBCELL_NONE
@@ -1372,15 +1383,19 @@ def _with_subcell(
     spark: SparkSession, sf_dir: str, assigned: DataFrame
 ) -> DataFrame:
     """Add the level-2 ``subcell`` column to a (vec_id, cell, ...)
-    frame. Single-level corpora get the literal 0 — the exact pre-r14
-    layout, no extra join or shuffle in the plan."""
+    frame, scoring each row's unit vector (read from
+    :func:`shared_coarse_assignment`) within its own ``cell``. Single-
+    level corpora get the literal 0 — the exact pre-r14 layout, no extra
+    join or shuffle in the plan. ``assigned`` is read twice when the
+    split is active, so callers hand in a frozen or cheap frame."""
     from clickhouse_build_spark.operators.similarity import subcell_assign
 
     subcent = shared_subcell_centroids(spark, sf_dir)
     if subcent is None:
         return assigned.withColumn("subcell", F.lit(0).cast("long"))
+    unit = shared_coarse_assignment(spark, sf_dir).select("vec_id", "e")
     sub = subcell_assign(
-        assigned.join(_unit_vectors(spark, sf_dir), "vec_id"), subcent
+        assigned.select("vec_id", "cell").join(unit, "vec_id"), subcent
     )
     return assigned.join(sub, ["vec_id", "cell"])
 
@@ -1398,10 +1413,11 @@ def shared_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``emb_ivfpq_topk``'s scan.
 
     Encode plan: unit-normalize (cosine ranking ⇔ L2 on the sphere, the
-    FAISS normalize-then-L2 recipe), coarse-assign via one broadcast
-    pass, subtract the broadcast centroid, then a vectorized
-    Arrow-batched argmin over the broadcast codebook tensor — the whole
-    encode is SHUFFLE-FREE and emits one narrow row per vector.
+    FAISS normalize-then-L2 recipe) and coarse-assign — both read from
+    :func:`shared_coarse_assignment` — then one vectorized Arrow kernel
+    subtracts the centroid and takes the argmin over the broadcast
+    codebook tensor — the whole encode is SHUFFLE-FREE and emits one
+    narrow row per vector.
     (VERDICT r06 note #5: the previous plan cross-joined the 256-row
     codebook frame — a 256× row inflation through a grouped argmin —
     which is exactly what dominates an index build at 10⁹ vectors; the
@@ -1420,29 +1436,10 @@ def shared_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from clickhouse_build_spark.plans.artifacts import session_artifact
 
     def build() -> str:
-        codes = _ivfpq_encode(
-            spark, sf_dir, _vectors(spark, sf_dir), top2=True
-        )
-        # The codes feed up to three branches (subcell scoring, the
-        # final write, and the rank-2 probe handoff below) — freeze
-        # them so the encode kernel runs once.
-        codes = codes.localCheckpoint(eager=True)
-        # r17: the encode kernel's score matrix yields the runner-up
-        # coarse cell for free; stash it for shared_ivfpq_probes so a
-        # same-session probe build skips re-reading and re-scoring the
-        # whole corpus (bit-identical to its exclusion-kernel pass —
-        # same S, same masked argmax). Session-scoped lazy plan over
-        # the checkpoint: no result caching across processes.
-        app_id = spark.sparkContext.applicationId
-        # evict stale-session entries (ADVICE r17): a long-lived
-        # process that recreates SparkSessions must not leak
-        # checkpoint-backed frames of dead sessions
-        for k in [k for k in _IVFPQ_RANK2 if k[0] != app_id]:
-            del _IVFPQ_RANK2[k]
-        _IVFPQ_RANK2[(app_id, sf_dir)] = codes.select(
-            "vec_id", F.col("cell2").alias("cell")
-        )
-        codes = codes.drop("cell2")
+        codes = _pq_encode(spark, sf_dir, shared_coarse_assignment(spark, sf_dir))
+        if shared_subcell_centroids(spark, sf_dir) is not None:
+            # the sub-cell join reads the codes twice: run the encode once
+            codes = codes.localCheckpoint(eager=True)
         codes = _with_subcell(spark, sf_dir, codes)
         # Corpus discriminators stamped onto every row (one tiny agg +
         # collect of a single 2-column row): the static-SQL oracle globs
@@ -1589,11 +1586,11 @@ def emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _vectors(spark, sf_dir)
     nlist = ivfpq_cells(spark, sf_dir)
     nprobe = ivfpq_nprobe(nlist)
-    cent = shared_ivf_centroids(spark, sf_dir, k=nlist, iters=5)
+    C = _ivfpq_quantizer(spark, sf_dir)[1]
     books = shared_pq_codebooks(spark, sf_dir)
     index = shared_ivfpq_index(spark, sf_dir)
     # Everything query-side is driver-sized: the query vector (one row,
-    # parquet-pushed-down), the centroid frame (nlist ≤ IVF_MAX_CELLS rows) and
+    # parquet-pushed-down), the centroid matrix (nlist ≤ IVFPQ_MAX_CELLS rows) and
     # the codebook tensor are all bounded at any corpus size — so cell
     # ranking and the per-probed-cell ADC LUT (nprobe × k rows) are
     # computed in numpy and shipped back as ONE literal broadcast frame
@@ -1604,7 +1601,6 @@ def emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.filter(F.col("vec_id") == QUERY_VEC_ID).select("e").collect()[0]["e"]
     )
     qh = qe / np.linalg.norm(qe)
-    C = np.vstack([r["ce"] for r in cent.orderBy("cell").collect()])
     cell_cos = C @ qh
     probe_cells = np.lexsort((np.arange(len(C)), -cell_cos))[:nprobe]
     lut_rows = [
@@ -1623,10 +1619,8 @@ def emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for s in range(PQ_M)
         for code in range(books.shape[1])
     ]
-    lut = spark.createDataFrame(lut_rows, "cell long, s int, code int, qd double")
-    q = spark.createDataFrame(
-        [([float(x) for x in qe],)], "qe array<double>"
-    )
+    lut = local_frame(spark, lut_rows, "cell long, s int, code int, qd double")
+    q = local_frame(spark, [(qe.tolist(),)], "qe array<double>")
     # ADC scan as ONE broadcast join: fan each indexed vector out to its
     # 8 (subspace, code) rows, hash-join the long-form LUT, sum partial
     # distances per vector. Measured 4.4× faster than eight chained
@@ -1751,70 +1745,31 @@ def shared_ivfpq_probes(
     from clickhouse_build_spark.plans.artifacts import session_artifact
 
     def build() -> str:
-        unit = _unit_vectors(spark, sf_dir)
-        subcent = shared_subcell_centroids(spark, sf_dir)
         if nprobe == SEMDEDUP_NPROBE:
             # r14: rank 1 IS the at-rest index's (cell, subcell) —
             # bit-identical by the pinned contract and already built
-            # by the index consumers, so the only scoring here is the
-            # rank-2 "next-best cell" pass (one narrow bounded argmax
-            # with the index cells as a broadcast exclusion). The
-            # previous plan re-scored ALL ranks through a collect_list
-            # whose shuffle carried every scored struct — the r14
-            # ladder's probe2 wall.
-            from clickhouse_build_spark.operators.similarity import (
-                ivf_assign_kernel,
-                subcell_assign,
+            # by the index consumers; rank 2 is the shared coarse
+            # assignment's runner-up cell, scored in the same kernel
+            # pass as rank 1, so nothing here re-reads or re-scores the
+            # corpus. (The r14 plan re-scored ALL ranks through a
+            # collect_list whose shuffle carried every scored struct —
+            # the r14 ladder's probe2 wall.)
+            rank1 = shared_ivfpq_index(spark, sf_dir).select(
+                "vec_id", "cell", "subcell", F.lit(1).alias("probe_rank")
             )
-
-            cent = shared_ivf_centroids(
-                spark, sf_dir, k=ivfpq_cells(spark, sf_dir), iters=5
+            r2 = shared_coarse_assignment(spark, sf_dir).select(
+                "vec_id", F.col("cell2").alias("cell"), F.lit(2).alias("probe_rank")
             )
-            idx = shared_ivfpq_index(spark, sf_dir).select(
-                "vec_id", "cell", "subcell"
-            )
-            rank1 = idx.select(
-                "vec_id", "cell", "subcell",
-                F.lit(1).alias("probe_rank"),
-            )
-            # r17: when THIS session built the index, its encode pass
-            # already produced the runner-up cell from the same score
-            # matrix (bit-identical to the exclusion kernel — same S,
-            # same masked first-max argmax); consume the handoff and
-            # skip re-reading + re-scoring the corpus. A warm at-rest
-            # index leaves no handoff → the exclusion pass runs as
-            # before.
-            r2_pre = _IVFPQ_RANK2.get(
-                (spark.sparkContext.applicationId, sf_dir)
-            )
-            if r2_pre is not None:
-                r2 = r2_pre.select(
-                    "vec_id", "cell", F.lit(2).alias("probe_rank")
-                )
-            else:
-                r2 = ivf_assign_kernel(
-                    unit, cent, exclude=idx.select("vec_id", "cell")
-                ).select(
-                    "vec_id", "cell", F.lit(2).alias("probe_rank")
-                )
-            if subcent is None:
-                rank2 = r2.withColumn("subcell", F.lit(0).cast("long"))
-            else:
-                if r2_pre is None:
-                    # freeze the n narrow rank-2 rows: they feed both
-                    # the subcell scoring and the final join (the
-                    # handoff frame is already checkpoint-backed)
-                    r2 = r2.localCheckpoint(eager=True)
-                sub = subcell_assign(r2.join(unit, "vec_id"), subcent)
-                rank2 = r2.join(sub, ["vec_id", "cell"])
+            rank2 = _with_subcell(spark, sf_dir, r2)
             probes = rank1.unionByName(
                 rank2.select("vec_id", "cell", "subcell", "probe_rank")
             )
         else:
-            cent = shared_ivf_centroids(
-                spark, sf_dir, k=ivfpq_cells(spark, sf_dir), iters=5
+            unit = _unit_vectors(spark, sf_dir)
+            subcent = shared_subcell_centroids(spark, sf_dir)
+            probes = ivf_assign_probes(
+                unit, _ivfpq_quantizer(spark, sf_dir)[0], nprobe=nprobe
             )
-            probes = ivf_assign_probes(unit, cent, nprobe=nprobe)
             if subcent is None:
                 probes = probes.withColumn(
                     "subcell", F.lit(0).cast("long")
@@ -1827,18 +1782,11 @@ def shared_ivfpq_probes(
                 probes = probes.localCheckpoint(eager=True)
                 sub = subcell_assign(probes.join(unit, "vec_id"), subcent)
                 probes = probes.join(sub, ["vec_id", "cell"])
-        emb = load_tables(spark, sf_dir)["embeddings"]
-        d = emb.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr(
-                "sum((vec_id + 1) * CAST(floor(CAST(element_at(embedding, 1)"
-                " AS DOUBLE) * 1000000 + 0.5) AS BIGINT))"
-            ).alias("fp"),
-        ).collect()[0]
+        n, fp = _corpus_discriminators(spark, sf_dir)
         probes = probes.select(
             "*",
-            F.lit(int(d["n"])).cast("long").alias("n_corpus"),
-            F.lit(int(d["fp"])).cast("long").alias("fp_corpus"),
+            F.lit(n).cast("long").alias("n_corpus"),
+            F.lit(fp).cast("long").alias("fp_corpus"),
         )
         # nprobe level FIRST so an oracle glob rooted at .../np{n} never
         # unions exports built with a different probe depth
@@ -1854,9 +1802,7 @@ def shared_ivfpq_probes(
             .partitionBy("cell")
             .parquet(staging),
             path,
-            is_current=lambda p: _export_matches_corpus(
-                spark, p, int(d["n"]), int(d["fp"])
-            ),
+            is_current=lambda p: _export_matches_corpus(spark, p, n, fp),
         )
         return path
 

@@ -13,8 +13,48 @@ fuller tasks.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import SparkSession
+
+
+def _partitions(path: str, partition_col: str) -> list[str]:
+    prefix = f"{partition_col}="
+    return sorted(
+        d
+        for d in os.listdir(path)
+        if d.startswith(prefix) and os.path.isdir(os.path.join(path, d))
+    )
+
+
+def _swap_in(path: str, staging: str, part: str) -> None:
+    """Replace ``path/part`` with the rewrite staged at ``staging/part``
+    via two renames: the old dir moves aside (readers between the
+    renames get a transient missing-partition, never a mix of old+new
+    rows), then the trash is dropped. A crash anywhere in here is
+    repaired by :func:`_recover` on the next run."""
+    trash = os.path.join(staging, part + "__old")
+    os.rename(os.path.join(path, part), trash)
+    os.rename(os.path.join(staging, part), os.path.join(path, part))
+    shutil.rmtree(trash)
+
+
+def _recover(path: str, staging: str) -> None:
+    """Finish or roll back the swaps a crashed run left behind, then
+    clear ``staging``. A ``part__old`` whose live ``path/part`` is
+    missing crashed between the two renames — it is the only copy and
+    moves back; one whose live dir exists is a committed swap's trash."""
+    if not os.path.isdir(staging):
+        return
+    for name in os.listdir(staging):
+        if name.endswith("__old"):
+            old = os.path.join(staging, name)
+            live = os.path.join(path, name[: -len("__old")])
+            if os.path.isdir(live):
+                shutil.rmtree(old)
+            else:
+                os.rename(old, live)
+    shutil.rmtree(staging)
 
 
 def compact_table(
@@ -33,12 +73,10 @@ def compact_table(
 
     Returns {partition_value: (files_before, files_after)}.
     """
+    staging = path + "__compacting"
+    _recover(path, staging)
     report: dict[str, tuple[int, int]] = {}
-    prefix = f"{partition_col}="
-    parts = sorted(
-        d for d in os.listdir(path) if d.startswith(prefix) and os.path.isdir(os.path.join(path, d))
-    )
-    for part in parts:
+    for part in _partitions(path, partition_col):
         pdir = os.path.join(path, part)
         files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
         size = sum(os.path.getsize(os.path.join(pdir, f)) for f in files)
@@ -56,26 +94,13 @@ def compact_table(
         # mid-compaction (or a concurrent read) would then see duplicated
         # rows and a string-typed partition column. Outside the root, a
         # crash just leaves harmless garbage next to the table.
-        tmp = os.path.join(path + "__compacting", part)
-        df.write.mode("overwrite").parquet(tmp)
-        # swap via two renames: the old dir moves aside (readers between
-        # the renames get a transient missing-partition, never a mix of
-        # old+new rows), then the trash is dropped
-        import shutil
-
-        trash = os.path.join(path + "__compacting", part + "__old")
-        os.rename(pdir, trash)
-        os.rename(tmp, pdir)
-        shutil.rmtree(trash)
+        df.write.mode("overwrite").parquet(os.path.join(staging, part))
+        _swap_in(path, staging, part)
         report[part] = (
             len(files),
             len([f for f in os.listdir(pdir) if f.endswith(".parquet")]),
         )
-    staging = path + "__compacting"
-    if os.path.isdir(staging):
-        import shutil
-
-        shutil.rmtree(staging)
+    _recover(path, staging)
     return report
 
 
@@ -100,44 +125,47 @@ def purge_tombstones(
     rewritten; returns {partition: rows_purged}.
     """
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     from clickhouse_build_spark.sources.replication import DELETE_OP, OP_COLUMN
 
-    report: dict[str, int] = {}
-    prefix = f"{partition_col}="
-    parts = sorted(
-        d
-        for d in os.listdir(path)
-        if d.startswith(prefix) and os.path.isdir(os.path.join(path, d))
-    )
-    for part in parts:
-        pdir = os.path.join(path, part)
-        df = spark.read.parquet(pdir)
-        if OP_COLUMN not in df.columns:
-            report[part] = 0
-            continue
-        dead = F.coalesce(F.col(OP_COLUMN), F.lit("")) == DELETE_OP
-        if horizon is not None:
-            dead = dead & (F.col(version_col) <= F.lit(horizon))
-        n_dead = df.filter(dead).count()
-        if n_dead == 0:
-            report[part] = 0
-            continue
-        kept = df.filter(~dead)
-        tmp = os.path.join(path + "__purging", part)
-        kept.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        trash = os.path.join(path + "__purging", part + "__old")
-        os.rename(pdir, trash)
-        os.rename(tmp, pdir)
-        shutil.rmtree(trash)
-        report[part] = n_dead
     staging = path + "__purging"
-    if os.path.isdir(staging):
-        import shutil
-
-        shutil.rmtree(staging)
+    _recover(path, staging)
+    parts = _partitions(path, partition_col)
+    report = dict.fromkeys(parts, 0)
+    if not parts:
+        return report
+    # One schema read over every partition: their parquet schemas
+    # diverge once tombstone retention adds _op to touched buckets only.
+    schema = spark.read.option("mergeSchema", "true").parquet(path).schema
+    if OP_COLUMN not in schema.names:
+        return report
+    data = T.StructType([f for f in schema if f.name != partition_col])
+    dead = F.coalesce(F.col(OP_COLUMN), F.lit("")) == DELETE_OP
+    if horizon is not None:
+        dead = dead & (F.col(version_col) <= F.lit(horizon))
+    # Dead rows of every partition in one aggregate; the partition
+    # column read as its raw directory string names the directory.
+    by_dir = T.StructType(
+        [*data.fields, T.StructField(partition_col, T.StringType())]
+    )
+    counts = (
+        spark.read.schema(by_dir).parquet(path)
+        .filter(dead)
+        .groupBy(partition_col)
+        .count()
+        .collect()
+    )
+    for value, n_dead in counts:
+        report[f"{partition_col}={value}"] = n_dead
+    for part in parts:
+        if report[part]:
+            kept = spark.read.schema(data).parquet(os.path.join(path, part))
+            kept.filter(~dead).write.mode("overwrite").parquet(
+                os.path.join(staging, part)
+            )
+            _swap_in(path, staging, part)
+    _recover(path, staging)
     return report
 
 

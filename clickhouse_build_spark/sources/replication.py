@@ -39,6 +39,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clickhouse_build_spark.localframe import local_frame
+
 
 class ReplicationMode(str, enum.Enum):
     """Mirrors the reference's mode enum (``src/tools/data_migrator.py:10-21``)."""
@@ -444,7 +446,7 @@ class Replicator:
             schema = T.StructType.fromJson(
                 __import__("json").load(open(os.path.join(rpath, _SCHEMA_FILE)))
             )
-            raw = self.spark.createDataFrame([], schema)
+            raw = local_frame(self.spark, [], schema)
         else:
             raw = self.spark.read.parquet(rpath)
         cols = [*spec.group_cols, F.col("n_rows")]
@@ -464,8 +466,8 @@ class Replicator:
         of failing the scan."""
         path = self._target_path(mapping)
         if not any(d.startswith("bucket=") for d in os.listdir(path)):
-            df = self.spark.createDataFrame(
-                [], self._sidecar_schema(path)
+            df = local_frame(
+                self.spark, [], self._sidecar_schema(path)
             ).drop("bucket")
         else:
             df = self._read_with_sidecar_schema(path).drop("bucket")

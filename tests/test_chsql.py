@@ -1625,9 +1625,10 @@ def test_corr_zero_variance_bucket_null_not_crash(spark):
 
 
 def test_corr_bitexact_vs_native_on_nondegenerate(spark):
-    """The regr_* co-moment form must be BIT-EXACT vs Spark's Corr on
-    non-degenerate input (same CentralMomentAgg accumulators) so the
-    fix changes no green gate hash."""
+    """The regr_sxy co-moment form must be BIT-EXACT vs Spark's Corr on
+    non-degenerate input (Covariance's update and merge, which are
+    Corr's own co-moment accumulators) so the fix changes no green gate
+    hash."""
     import random
 
     random.seed(7)

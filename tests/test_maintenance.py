@@ -231,3 +231,108 @@ def test_replicate_cli_with_rollup(tmp_path):
     )
     assert res["rows"] == 1500
     assert res["rollup_groups"] == 3  # O / F / P
+
+
+def _crash_at_rename(monkeypatch, k, fn):
+    """Run ``fn`` with the k-th ``os.rename`` raising — a writer killed
+    at that point of its swap. Returns whether the crash was hit."""
+    real, calls = os.rename, [0]
+
+    def rename(src, dst):
+        calls[0] += 1
+        if calls[0] == k:
+            raise OSError(f"injected crash at rename {k}")
+        return real(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", rename)
+        try:
+            fn()
+        except OSError as e:
+            assert "injected crash" in str(e)
+            return True
+    return False
+
+
+def _raw_rows(spark, rep, path):
+    """Every stored row, tombstones included, as a sorted multiset."""
+    raw = spark.read.schema(rep._sidecar_schema(path)).parquet(path)
+    return sorted((tuple(sorted(r.asDict().items())) for r in raw.collect()), key=repr)
+
+
+def test_compaction_rerun_after_crash_mid_swap_keeps_every_row(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction killed at any rename of its two-rename swap, then
+    rerun, leaves exactly the rows it started with: the rerun restores
+    a partition stranded in staging instead of deleting it."""
+    import shutil
+
+    rep = Replicator(
+        spark=spark, target_root=str(tmp_path / "seed"),
+        key_cols=["k"], version_col="ver", n_buckets=2,
+    )
+    mapping = TableMapping("public", "t", "t")
+    rep.replicate(
+        spark.createDataFrame([(i, 1) for i in range(40)], "k long, ver long"),
+        mapping, mode="snapshot",
+    )
+    seed = str(tmp_path / "seed" / "t")
+    extra = rep._bucketed(
+        spark.createDataFrame([(i, 2) for i in range(100, 140)], "k long, ver long")
+    )
+    extra.repartition("bucket").write.mode("append").partitionBy("bucket").parquet(seed)
+    want = _raw_rows(spark, rep, seed)
+    crashes = 0
+    for k in range(1, 6):
+        path = str(tmp_path / f"run{k}" / "t")
+        shutil.copytree(seed, path)
+        compact = lambda: compact_table(spark, path, sort_cols=["k", "ver"])  # noqa: E731
+        crashes += _crash_at_rename(monkeypatch, k, compact)
+        report = compact()
+        assert _raw_rows(spark, rep, path) == want, k
+        assert all(after == 1 for (_, after) in report.values()), report
+        assert not os.path.exists(path + "__compacting")
+    assert crashes == 4  # two partitions x two renames, each one hit
+
+
+def test_purge_rerun_after_crash_mid_swap_keeps_every_row(
+    spark, tmp_path, monkeypatch
+):
+    """A tombstone purge killed at any rename of its swap, then rerun,
+    leaves the committed row set (every live row, no purged tombstone)
+    — never a partition lost between the renames."""
+    import shutil
+
+    from clickhouse_build_spark.sources.maintenance import purge_tombstones
+
+    rep = Replicator(
+        spark=spark, target_root=str(tmp_path / "seed"),
+        key_cols=["k"], version_col="ver", n_buckets=2,
+    )
+    mapping = TableMapping("public", "t", "t")
+    rep.replicate(
+        spark.createDataFrame([(i, 1) for i in range(40)], "k long, ver long"),
+        mapping, mode="snapshot",
+    )
+    rep.apply_changes(
+        spark.createDataFrame(
+            [(i, 2, "d") for i in range(0, 40, 3)], "k long, ver long, _op string"
+        ),
+        mapping,
+    )
+    seed = str(tmp_path / "seed" / "t")
+    pre = _raw_rows(spark, rep, seed)
+    committed = [r for r in pre if dict(r).get("_op") != "d"]
+    assert len(pre) - len(committed) == 14
+    crashes = 0
+    for k in range(1, 6):
+        path = str(tmp_path / f"run{k}" / "t")
+        shutil.copytree(seed, path)
+        purge = lambda: purge_tombstones(spark, path, version_col="ver")  # noqa: E731
+        crashes += _crash_at_rename(monkeypatch, k, purge)
+        purge()
+        # the rerun finishes the purge: the committed set, never fewer
+        assert _raw_rows(spark, rep, path) == committed, k
+        assert not os.path.exists(path + "__purging")
+    assert crashes == 4  # both partitions hold tombstones: 2 x 2 renames

@@ -335,30 +335,28 @@ def test_subcell_split_oracle_hash_exact(spark, planted_dir, monkeypatch):
 
 
 def test_rank2_handoff_matches_exclusion_kernel(spark):
-    """The r17 index-build handoff (runner-up cell carved from the
-    encode pass's own score matrix) must equal the probe builder's
-    fallback path (re-score with the rank-1 cell excluded) — the
-    invariant that makes consuming the handoff a pure plan change."""
+    """The rank-2 cell the probe table reads (the shared coarse
+    assignment's runner-up, carved from the top-2 kernel pass's own
+    score matrix) must equal a re-score with the index's rank-1 cell
+    excluded — the invariant that lets one kernel pass serve the index
+    and the nprobe=2 probe table."""
     from clickhouse_build_spark.operators.similarity import ivf_assign_kernel
     from clickhouse_build_spark.plans.similarity import (
-        _IVFPQ_RANK2,
         _unit_vectors,
         ivfpq_cells,
+        shared_coarse_assignment,
         shared_ivf_centroids,
         shared_ivfpq_index,
     )
 
     idx = shared_ivfpq_index(spark, SF).select("vec_id", "cell")
-    stash = _IVFPQ_RANK2.get((spark.sparkContext.applicationId, SF))
-    # the suite builds the index in THIS session somewhere before or
-    # during this test, so the handoff must be populated
-    assert stash is not None
     cent = shared_ivf_centroids(
         spark, SF, k=ivfpq_cells(spark, SF), iters=5
     )
-    fallback = ivf_assign_kernel(
+    exclusion = ivf_assign_kernel(
         _unit_vectors(spark, SF), cent, exclude=idx
     ).select("vec_id", "cell")
-    got = {r["vec_id"]: r["cell"] for r in stash.collect()}
-    want = {r["vec_id"]: r["cell"] for r in fallback.collect()}
+    rank2 = shared_coarse_assignment(spark, SF).select("vec_id", "cell2")
+    got = {r["vec_id"]: r["cell2"] for r in rank2.collect()}
+    want = {r["vec_id"]: r["cell"] for r in exclusion.collect()}
     assert got == want and len(got) > 0
